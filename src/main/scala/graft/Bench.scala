@@ -736,19 +736,6 @@ object Bench {
     // the grid, not the algorithm. Sub-1M corpora keep the r8 grid exactly.
     val graphSweepEfs = Seq(8, 16, 24, 32, 48, 64, 96, 128) ++
       (if (n >= 1000000L) Seq(256, 512) else Seq.empty)
-    // r13 (VERDICT r12 item 7) — measured and NOT adopted: replacing the
-    // r12 concurrent-job striping with a one-job in-task fan
-    // (probeBatch(fan=) over FanoutRDD, parts × fan tasks in ONE job) read
-    // SLOWER on this host (graph track A/B: 12.5k → 10.6k q/s; ProbeFloor
-    // medians 47.7 → 49.5 ms at ef8, 48.7 → 57.3 ms at ef32) — the sf0.1
-    // floor is per-TASK event-loop bookkeeping (64 launches either way),
-    // which concurrent jobs already pipeline, not the per-job submit. The
-    // fan stays a tested library capability (KnnSpec parity); the rows
-    // keep striping. What DID land from the same measurement: probeBatch
-    // no longer broadcasts its (almost always empty) tombstone/delta
-    // collections — 2 creations + 2 blocking destroys per stripe per
-    // batch of driver-serialized bookkeeping, ~26% of the striped batch
-    // wall in the floor harness (65.8 → 48.7 ms at ef32).
     def graphFamily(family: String, resident: index.HnswResident,
                     truth: DataFrame): (Int, Double) = {
       val recalls = graphSweepEfs.map { ef =>
@@ -1654,9 +1641,11 @@ object Bench {
       if (!trackOn("streaming")) (0.0, 0.0, 0.0, "[]", "")
       else {
       try {
+        // the checked-in stand-in of the reference's delete runbook (its
+        // documented shape), read from the checkout Bench runs in
         val yaml = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(
-            "/root/reference/streaming/delete_runbook.yaml")))
+            "src/test/resources/runbooks/delete_runbook.yaml")))
         // BASELINE row 4 grades the msturing-10M-clustered doc (32 ins /
         // 10 del / 33 search, max_pts 6M — scaled, so occupancy-triggered
         // consolidations fire at the same relative points)

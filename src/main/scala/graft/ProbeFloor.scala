@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   empty_job        — rdd.count() on the resident 8-partition RDD
   *                      (job submit + schedule + 8 no-op tasks + collect)
   *   bc_create_destroy— broadcast a 500×64-float query array, blocking
-  *                      destroy (what probeBatch pays 3× per stripe)
+  *                      destroy (what probeBatch pays once per stripe)
   *   bc_create_only   — same broadcast, destroy deferred
   *   probe_unsliced   — HnswResident.probeBatch(500q), ONE job
   *   probe_striped_s  — ProbeSlices.striped at the bench's auto() count
@@ -78,18 +78,6 @@ object ProbeFloor {
           st => resident.probeBatch(st, k = 10, efSearch = ef))(
           r => (r._1, r._4)).nonEmpty)
       }
-      for (f <- Seq(2, 4, 8))
-        med(s"probe_fan${f}_ef$ef", 30) {
-          require(resident.probeBatch(qs, k = 10, efSearch = ef,
-            fan = f).nonEmpty)
-        }
-      // hybrid: s concurrent jobs, each fanned f ways (s·f·parts tasks)
-      for ((s, f) <- Seq((2, 4), (4, 2)))
-        med(s"probe_striped${s}_fan${f}_ef$ef", 30) {
-          require(index.ProbeSlices.striped(qs, s)(
-            st => resident.probeBatch(st, k = 10, efSearch = ef, fan = f))(
-            r => (r._1, r._4)).nonEmpty)
-        }
     }
     resident.unload()
     spark.stop()

@@ -21,8 +21,10 @@ final case class HnswNodeRow(part: Int, seq: Int, id: Long, vec: Array[Float],
   * probes are narrow maps over persisted graph objects. Results equal
   * [[HnswKnn.probeSaved]]/[[HnswKnn.knn]] on the same build. Call
   * [[unload]] when done — the graphs hold executor storage until then. */
-final class HnswResident(spark: SparkSession,
-                         rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])]) {
+final class HnswResident private[index] (
+    spark: SparkSession,
+    rdd: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])],
+    d: Int) {
 
   private def run(qs: Array[(Long, Array[Float], Array[Int])], k: Int,
                   efSearch: Int, filtered: Boolean,
@@ -80,86 +82,26 @@ final class HnswResident(spark: SparkSession,
     * the global top-k exchange stage entirely. Output rows are (qid, id,
     * dist, rank), sorted by (qid, rank).
     *
-    * `fan` > 1 (r13, VERDICT r12 item 7) widens the SAME single job to
-    * parts × fan tasks via [[FanoutRDD]]: task (shard s, stripe t) probes
-    * round-robin stripe t of the batch against shard s, so idle cores fill
-    * WITHOUT the per-job floor that r12's concurrent-job striping paid per
-    * stripe (~10–14 ms/job on this host, measured in graft.ProbeFloor —
-    * the sf0.1 serving rows were bounded by it). Every (query, shard) pair
-    * is still computed exactly once with the unchanged kernel, so results
-    * are identical row-for-row at any fan (KnnSpec asserts it);
-    * `fan = 1` is the pre-r13 path byte-for-byte. */
+    * `tombstones` are excluded in-traversal; `delta` holds rows inserted
+    * since the resident generation was built, served by exact scan and
+    * merged with the graph candidates (the FreshDiskANN shape: immutable
+    * built index + small mutable delta), striped across partitions so the
+    * scan parallelizes with the probe. Both ride in the batch's one
+    * payload; the caller bounds their size. */
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, efSearch: Int = 64,
                  tombstones: Set[Long] = Set.empty,
                  delta: Array[(Long, Array[Float])] = Array.empty,
-                 treeMergeAt: Int = 64,
-                 fan: Int = 1): Array[(Long, Long, Double, Long)] = {
-    val f = math.max(1, math.min(fan, math.max(1, qs.length)))
-    val bq = spark.sparkContext.broadcast(qs)
-    // empty tombstone/delta collections skip their broadcasts entirely
-    // (r13): the CLEAN-index serving batch — every headline row but the
-    // mutated one — paid 2 broadcast creations + 2 blocking destroys per
-    // batch (per STRIPE under r12 striping) for two empty collections,
-    // and that driver-side bookkeeping is a measured part of the sf0.1
-    // submit floor (graft.ProbeFloor: ~1.6 ms per empty create+destroy,
-    // serialized on the driver).
-    val bt = if (tombstones.isEmpty) None
-             else Some(spark.sparkContext.broadcast(tombstones))
-    // delta buffer: rows inserted since the resident generation was built,
-    // served by exact scan and merged with the graph candidates (the
-    // FreshDiskANN shape: immutable built index + small mutable delta).
-    // Striped across partitions so the scan parallelizes with the probe;
-    // the caller bounds its size, so the broadcast is small by construction.
-    val bd = if (delta.isEmpty) None
-             else Some(spark.sparkContext.broadcast(delta))
+                 treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
     val nParts = math.max(rdd.getNumPartitions, 1)
-    val local = Fanout.of(rdd, f).flatMap { case ((idx, _), stripe) =>
-      val dead = bt.map(_.value).getOrElse(Set.empty[Long])
-      // parent shard index: child partitions pack as shard * fan + stripe
-      val part = TaskContext.getPartitionId() / f
-      // this SHARD's stripe of the delta buffer (delta placement must not
-      // depend on the query fan, or fanned and unfanned results could
-      // diverge in which shard ranks a delta row)
-      val slice = Array.newBuilder[(Long, Array[Float])]
-      var di = part
-      val dArr = bd.map(_.value).getOrElse(Array.empty[(Long, Array[Float])])
-      while (di < dArr.length) { slice += dArr(di); di += nParts }
-      val mySlice = slice.result()
-      val qarr = bq.value
-      Iterator.range(stripe, qarr.length, f).flatMap { qi =>
-        val (qid, qv) = qarr(qi)
-        val res =
-          if (dead.nonEmpty)
-            idx.searchFiltered(qv, k, efSearch, id => !dead.contains(id))
-          else idx.search(qv, k, efSearch)
-        val extra = mySlice.iterator
-          .filterNot { case (id, _) => dead.contains(id) }
-          .map { case (id, v) => (id, idx.pairDist(qv, v)) }
-        // keep the contract: k DISTINCT candidate rows per (query,
-        // partition) — a re-inserted graph-resident id shows up in both
-        // sources with bit-identical distance, and counting it twice here
-        // could evict a genuine k-th candidate
-        val dup = scala.collection.mutable.HashSet.empty[Long]
-        (res.iterator ++ extra).toArray.sortBy { case (id, d) => (d, id) }
-          .iterator.filter { case (id, _) => dup.add(id) }
-          .take(k).map { case (id, d) => (qid, id, d) }
-      }
-    }
     // per-query merge with id-dedup (an id can arrive from both the graph
     // and the delta with bit-identical distance): driver merge at serving
     // partition counts, two-level treeAggregate past `treeMergeAt` shards
-    // (see [[ProbeMerge]]) — the driver stops being the fan-in ceiling.
-    // The tree gate scales by `f`: fan multiplies TASK count, not candidate
-    // volume (each (query, shard) pair still emits from exactly one child),
-    // and the volume bound `estRows` is unchanged — without the scaling a
-    // fanned sf0.1 batch would spill into the treeAggregate regime (an
-    // exchange) on partition count alone.
-    val out = ProbeMerge.topK(local, k, treeMergeAt * f,
-      estRows = qs.length.toLong * k * nParts)
-    // a serving loop issues many batches against one resident index: drop
-    // the per-batch broadcasts eagerly or the driver accumulates them
-    bq.destroy(); bt.foreach(_.destroy()); bd.foreach(_.destroy())
-    out
+    // (see [[ProbeMerge]]) — the driver stops being the fan-in ceiling
+    ResidentServe.batch(rdd, HnswResident.GraphBatch(qs, k, efSearch,
+      tombstones, delta, nParts))(HnswResident.probeShard)(
+      ProbeMerge.topK(_, k, treeMergeAt,
+        estRows = qs.length.toLong * k * nParts))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. Results equal
@@ -175,48 +117,73 @@ final class HnswResident(spark: SparkSession,
 
   def numPartitions: Int = rdd.getNumPartitions
 
-  /** Loan the PRE-MERGE candidate rows (qid, id, dist) of one probe batch
-    * — per-partition top-k, the stream [[probeBatch]] feeds [[ProbeMerge]]
-    * — to `f`, destroying the batch broadcast after `f` has run its jobs.
-    * For serving reduces that fold MORE than a plain top-k merge into the
-    * candidate fan-in ([[MaxSimServe]]'s distributed regime) without a
-    * second probe pass over the graphs. */
-  private[index] def withCandidates[T](qs: Array[(Long, Array[Float])],
-                                       k: Int, efSearch: Int)(
-      f: org.apache.spark.rdd.RDD[(Long, Long, Double)] => T): T = {
-    val bq = spark.sparkContext.broadcast(qs)
-    try f(rdd.flatMap { case (idx, _) =>
-      bq.value.iterator.flatMap { case (qid, qv) =>
-        idx.search(qv, k, efSearch).iterator.map { case (id, d) => (qid, id, d) }
-      }
-    })
-    finally bq.destroy()
-  }
-
-  /** [[withCandidates]] at ARRAY granularity: one (qid, sorted candidates)
-    * row per (query, partition) instead of one row per candidate. The
-    * arrays arrive already (dist asc, id asc)-sorted from the search, so a
-    * downstream `reduceByKey(ProbeMerge.mergeTwo(_, _, c))` costs
-    * O(P · c) per query — merging P sorted arrays — where the singleton
-    * exploded form costs O(c²) per (query, partition) in the map-side
-    * combine (each of c singletons re-copies the growing buffer). At the
-    * corpus-relative c knob's 10×-scale values that difference is the
-    * whole serving budget. */
+  /** Loan the PRE-MERGE candidates of one probe batch to `f` at ARRAY
+    * granularity — one (qid, sorted candidates) row per (query, partition),
+    * the per-partition top-k [[probeBatch]] feeds [[ProbeMerge]] — and
+    * release the batch payload after `f` has run its jobs. For serving
+    * reduces that fold MORE than a plain top-k merge into the candidate
+    * fan-in ([[MaxSimServe]]'s distributed regime) without a second probe
+    * pass over the graphs. The arrays arrive already (dist asc, id
+    * asc)-sorted from the search, so a downstream
+    * `reduceByKey(ProbeMerge.mergeTwo(_, _, c))` costs O(P · c) per query
+    * — merging P sorted arrays — where a singleton-exploded form costs
+    * O(c²) per (query, partition) in the map-side combine (each of c
+    * singletons re-copies the growing buffer). At the corpus-relative c
+    * knob's 10×-scale values that difference is the whole serving
+    * budget. */
   private[index] def withCandidateArrays[T](qs: Array[(Long, Array[Float])],
                                             k: Int, efSearch: Int)(
       f: org.apache.spark.rdd.RDD[(Long, Array[(Long, Double)])] => T): T = {
-    val bq = spark.sparkContext.broadcast(qs)
-    try f(rdd.flatMap { case (idx, _) =>
-      bq.value.iterator.map { case (qid, qv) =>
-        (qid, idx.search(qv, k, efSearch))
-      }
-    })
-    finally bq.destroy()
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
+    ResidentServe.batch(rdd, HnswResident.GraphBatch(qs, k, efSearch,
+      Set.empty, Array.empty, 1))(HnswResident.searchShard)(f)
   }
 
   private[index] def graphs: org.apache.spark.rdd.RDD[(HnswIndex, Map[Long, Array[Int]])] = rdd
 
   def unload(): Unit = rdd.unpersist()
+}
+
+object HnswResident {
+  private final case class GraphBatch(qs: Array[(Long, Array[Float])], k: Int,
+                                      efSearch: Int, tombstones: Set[Long],
+                                      delta: Array[(Long, Array[Float])],
+                                      parts: Int)
+
+  private def probeShard(shard: (HnswIndex, Map[Long, Array[Int]]),
+                         b: GraphBatch): Iterator[(Long, Long, Double)] = {
+    val idx = shard._1
+    val dead = b.tombstones
+    // this shard's stripe of the delta buffer
+    val mine = Iterator.range(TaskContext.getPartitionId(), b.delta.length,
+      b.parts).map(b.delta).toArray
+    b.qs.iterator.flatMap { case (qid, qv) =>
+      val res =
+        if (dead.nonEmpty)
+          idx.searchFiltered(qv, b.k, b.efSearch, id => !dead.contains(id))
+        else idx.search(qv, b.k, b.efSearch)
+      val extra = mine.iterator
+        .filterNot { case (id, _) => dead.contains(id) }
+        .map { case (id, v) => (id, idx.pairDist(qv, v)) }
+      // keep the contract: k DISTINCT candidate rows per (query,
+      // partition) — a re-inserted graph-resident id shows up in both
+      // sources with bit-identical distance, and counting it twice here
+      // could evict a genuine k-th candidate
+      val dup = scala.collection.mutable.HashSet.empty[Long]
+      (res.iterator ++ extra).toArray.sortBy { case (id, d) => (d, id) }
+        .iterator.filter { case (id, _) => dup.add(id) }
+        .take(b.k).map { case (id, d) => (qid, id, d) }
+    }
+  }
+
+  private def searchShard(shard: (HnswIndex, Map[Long, Array[Int]]),
+                          b: GraphBatch): Iterator[(Long, Array[(Long, Double)])] =
+    b.qs.iterator.map { case (qid, qv) =>
+      (qid, shard._1.search(qv, b.k, b.efSearch))
+    }
+
+  private[index] def dimOf(shard: (HnswIndex, Map[Long, Array[Int]])): Int =
+    shard._1.dim
 }
 
 /** Distributed approximate kNN: one [[HnswIndex]] per partition of the base
@@ -498,8 +465,7 @@ object HnswKnn {
         Iterator.single((idx, tagMap.result()))
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    built.count() // materialize the graphs before the first probe
-    new HnswResident(spark, built)
+    new HnswResident(spark, built, ResidentServe.pin(built)(HnswResident.dimOf))
   }
 
   def loadResident(spark: SparkSession, path: String): HnswResident = {
@@ -514,8 +480,7 @@ object HnswKnn {
         (idx, arr.map(r => r.id -> r.tags).toMap)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the graphs before the first probe
-    new HnswResident(spark, rdd)
+    new HnswResident(spark, rdd, ResidentServe.pin(rdd)(HnswResident.dimOf))
   }
 
   /** One persisted row of a QUANTIZED partition-local graph: uint8 codes

@@ -32,13 +32,8 @@ final class HnswRouted(spark: SparkSession,
     * MIPS routes to the centroids of max inner product, the IVF-MIPS
     * convention). Ties break to the lower cid. */
   private def rankCentroids(qv: Array[Float]): Array[(Double, Int)] =
-    centroids.map { case (cid, c) =>
-      var acc = 0.0; var i = 0
-      val n = math.min(qv.length, c.length)
-      if (ipMetric) { while (i < n) { acc -= qv(i).toDouble * c(i).toDouble; i += 1 } }
-      else { while (i < n) { val d = qv(i).toDouble - c(i).toDouble; acc += d * d; i += 1 } }
-      (acc, cid)
-    }.sortBy(identity)
+    centroids.map { case (cid, c) => (ResidentServe.dist(qv, c, ipMetric), cid) }
+      .sortBy(identity)
 
   /** Route one query: the `nprobe` nearest cluster ids. */
   private def route(qv: Array[Float], nprobe: Int): Array[Int] =
@@ -114,6 +109,8 @@ final class HnswRouted(spark: SparkSession,
   private def probeRouted(qs: Array[(Long, Array[Float])],
                           routeFn: Array[Float] => Array[Int], k: Int,
                           efSearch: Int): Array[(Long, Long, Double, Long)] = {
+    ResidentServe.requireDim(
+      centroids.headOption.fold(-1)(_._2.length), qs.iterator.map(_._2.length))
     val byPart = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
     qs.iterator.zipWithIndex.foreach { case ((_, qv), qi) =>
       routeFn(qv).foreach { cid =>
@@ -122,18 +119,6 @@ final class HnswRouted(spark: SparkSession,
     }
     val routesByPart: Map[Int, Array[Int]] =
       byPart.iterator.map { case (cid, qis) => cid -> qis.toArray }.toMap
-    val bq = spark.sparkContext.broadcast(qs)
-    val br = spark.sparkContext.broadcast(routesByPart)
-    val local = rdd.flatMap { case (part, idx) =>
-      val queries = bq.value
-      br.value.get(part) match {
-        case None => Iterator.empty
-        case Some(qis) => qis.iterator.flatMap { qi =>
-          val (qid, qv) = queries(qi)
-          idx.search(qv, k, efSearch).iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }
-    }
     // ProbeMerge, not a raw collect: each probed cluster emits k rows per
     // routed query, so the fan-in is (routed pairs)·k — at C=20,000 with a
     // 25% sweep point that is ~25M rows (>1 GB serialized), which must
@@ -145,9 +130,8 @@ final class HnswRouted(spark: SparkSession,
     // take the raw collect with the same oversized fan-in. Small fan-ins
     // keep the one-narrow-job driver merge, byte-identical rows.
     val fanIn = routesByPart.valuesIterator.map(_.length.toLong).sum * k
-    val out = ProbeMerge.topK(local, k, estRows = fanIn)
-    bq.destroy(); br.destroy()
-    out
+    ResidentServe.batch(rdd, HnswRouted.RoutedBatch(qs, routesByPart, k,
+      efSearch))(HnswRouted.probeShard)(ProbeMerge.topK(_, k, estRows = fanIn))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
@@ -177,6 +161,22 @@ final class HnswRouted(spark: SparkSession,
 }
 
 object HnswRouted {
+  /** One batch: the queries plus, per probed cluster, the indices of the
+    * queries routed to it. */
+  private final case class RoutedBatch(qs: Array[(Long, Array[Float])],
+                                       routes: Map[Int, Array[Int]], k: Int,
+                                       efSearch: Int)
+
+  private def probeShard(shard: (Int, HnswIndex),
+                         b: RoutedBatch): Iterator[(Long, Long, Double)] =
+    b.routes.get(shard._1) match {
+      case None => Iterator.empty
+      case Some(qis) => qis.iterator.flatMap { qi =>
+        val (qid, qv) = b.qs(qi)
+        shard._2.search(qv, b.k, b.efSearch).iterator
+          .map { case (id, d) => (qid, id, d) }
+      }
+    }
 
   /** Build: k-means coarse centroids (on the base or a sample), one HNSW
     * graph per cluster, persisted in the [[HnswNodeRow]] parquet layout with

@@ -48,27 +48,10 @@ private[index] object ProbeMerge {
     * k is 10-ish, filled ≤ rerank. */
   private[index] def selectTopK(ids: Array[Long], dists: Array[Double],
                                 filled: Int, k: Int): Array[(Long, Double)] = {
-    val kk = math.min(k, filled)
-    val bid = new Array[Long](kk)
-    val bd = new Array[Double](kk)
-    var used = 0
+    val top = new TopKBuffer(math.min(k, filled))
     var i = 0
-    while (i < filled) {
-      val id = ids(i)
-      val d = dists(i)
-      if (used < kk || d < bd(used - 1) ||
-          (d == bd(used - 1) && id < bid(used - 1))) {
-        var pos = math.min(used, kk - 1)
-        while (pos > 0 && (bd(pos - 1) > d ||
-               (bd(pos - 1) == d && bid(pos - 1) > id))) {
-          bd(pos) = bd(pos - 1); bid(pos) = bid(pos - 1); pos -= 1
-        }
-        bd(pos) = d; bid(pos) = id
-        if (used < kk) used += 1
-      }
-      i += 1
-    }
-    Array.tabulate(used)(j => (bid(j), bd(j)))
+    while (i < filled) { top.offer(dists(i), ids(i)); i += 1 }
+    Array.tabulate(top.size)(j => (top.id(j), top.dist(j)))
   }
 
   /** Merge two (id, dist) arrays, each sorted by (dist asc, id asc), into

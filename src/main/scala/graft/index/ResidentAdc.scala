@@ -47,9 +47,10 @@ final case class AdcShard(ids: Array[Long], codes: Array[Short], m: Int,
   * [[ResidentIvfSq8]] or the residual [[ResidentIvfAdc]]; this flat
   * form's regime is the sub-million decade and the exact degenerate
   * gate. */
-final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
-                        cb: Pq.Codebook, metric: String,
-                        rot: Option[Opq.Rotation] = None) {
+final class ResidentAdc private[index] (spark: SparkSession,
+                                        rdd: RDD[AdcShard],
+                                        cb: Pq.Codebook, metric: String,
+                                        rot: Option[Opq.Rotation], d: Int) {
 
   /** Serving-form batch probe: (qid, qvec) rows in, (qid, id, dist, rank)
     * out, dist = the exact metric distance of the re-ranked rows, ordering
@@ -57,8 +58,7 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
   def probeBatch(qs: Array[(Long, Array[Float])], k: Int, rerank: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    val stride = cb.stride
-    val ip = metric == Metric.Ip
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
     // per-query LUTs prepared once per batch, client-side (the reference
     // computes its query-side tables outside the scan too). Under an OPQ
     // rotation the LUT is built from the ROTATED query (codes live in the
@@ -67,69 +67,9 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
     val luts = qs.map { case (qid, qv) =>
       (qid, qv, Pq.lutLocal(rot.map(_(qv)).getOrElse(qv), cb, metric))
     }
-    val bq = spark.sparkContext.broadcast(luts)
-    val local = rdd.flatMap { shard =>
-      val m = shard.m
-      val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qv, lut) =>
-        // bounded worst-first insertion buffer over ADC distances
-        val r = rerank
-        val bd = new Array[Double](r)
-        val bi = new Array[Int](r) // row indices, for the float gather
-        var filled = 0
-        var row = 0
-        while (row < n) {
-          val off = row * m
-          var acc = 0.0
-          var j = 0
-          while (j < m) {
-            acc += lut(j * stride + shard.codes(off + j))
-            j += 1
-          }
-          val id = shard.ids(row)
-          if (filled < r || acc < bd(filled - 1) ||
-              (acc == bd(filled - 1) && id < shard.ids(bi(filled - 1)))) {
-            var pos = math.min(filled, r - 1)
-            while (pos > 0 && (bd(pos - 1) > acc ||
-                   (bd(pos - 1) == acc && shard.ids(bi(pos - 1)) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = acc; bi(pos) = row
-            if (filled < r) filled += 1
-          }
-          row += 1
-        }
-        // exact re-rank of the survivors against the resident floats —
-        // the refine step, touching only `rerank` rows per (query, shard) —
-        // then emit only this shard's k best (ProbeMerge.selectTopK)
-        val rid = new Array[Long](filled)
-        val rdv = new Array[Double](filled)
-        var i2 = 0
-        while (i2 < filled) {
-          val v = shard.vecs(bi(i2))
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var x = 0
-          if (ip) {
-            while (x < d0) { acc += qv(x).toDouble * v(x).toDouble; x += 1 }
-            acc = -acc
-          } else {
-            while (x < d0) {
-              val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-            }
-          }
-          rid(i2) = shard.ids(bi(i2))
-          rdv(i2) = acc
-          i2 += 1
-        }
-        ProbeMerge.selectTopK(rid, rdv, filled, k).iterator
-          .map { case (id, dd) => (qid, id, dd) }
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
+    ResidentServe.batch(rdd, ResidentAdc.AdcBatch(luts, k, rerank, cb.stride,
+      metric == Metric.Ip))(ResidentAdc.scan)(ProbeMerge.topK(_, k,
+      treeMergeAt, estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
@@ -145,6 +85,35 @@ final class ResidentAdc(spark: SparkSession, rdd: RDD[AdcShard],
 }
 
 object ResidentAdc {
+  private final case class AdcBatch(
+      luts: Array[(Long, Array[Float], Array[Double])], k: Int, rerank: Int,
+      stride: Int, ip: Boolean)
+
+  /** ADC gather-scan into a `rerank`-bounded buffer, then the exact
+    * re-rank of the survivors against the resident floats — the refine
+    * step, touching only `rerank` rows per (query, shard). */
+  private def scan(shard: AdcShard,
+                   b: AdcBatch): Iterator[(Long, Long, Double)] = {
+    val m = shard.m
+    val n = shard.ids.length
+    b.luts.iterator.flatMap { case (qid, qv, lut) =>
+      val coarse = new TopKBuffer(b.rerank, withVecs = true)
+      var row = 0
+      while (row < n) {
+        val off = row * m
+        var acc = 0.0
+        var j = 0
+        while (j < m) {
+          acc += lut(j * b.stride + shard.codes(off + j))
+          j += 1
+        }
+        coarse.offer(acc, shard.ids(row), shard.vecs(row))
+        row += 1
+      }
+      coarse.refine(qid, qv, b.ip, b.k)
+    }
+  }
+
   /** Encode `base` = (id, vec) with `cb` and pin code+float shards
     * resident. Build once, probe many. */
   def load(base: DataFrame, cb: Pq.Codebook, numPartitions: Int,
@@ -190,7 +159,7 @@ object ResidentAdc {
         Iterator.single(AdcShard(rows.map(_._1), codes, m, rows.map(_._2)))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize before the first probe
-    new ResidentAdc(spark, rdd, cb, metric, rot)
+    val d = ResidentServe.pin(rdd)(s => if (s.vecs.isEmpty) -1 else s.vecs(0).length)
+    new ResidentAdc(spark, rdd, cb, metric, rot, d)
   }
 }

@@ -28,51 +28,19 @@ final case class BinaryShard(ids: Array[Long], codes: Array[Array[Long]],
   * [[ProbeMerge]] as every other resident form. Typical use: binary
   * first-pass retrieval feeding a float re-rank (the candidates-first
   * pattern of [[graft.operators.Dedup.embedNearDups]]). */
-final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
+final class ResidentBinary private[index] (spark: SparkSession,
+                                           rdd: RDD[BinaryShard],
+                                           words: Int, d: Int) {
 
   /** Serving-form batch probe: `qs` = (qid, packed query code). Returns
     * (qid, id, dist, rank) sorted by (qid, rank); dist is the integer
     * Hamming distance carried as double (≤ dim, exact). */
   def probeBatch(qs: Array[(Long, Array[Long])], k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = rdd.flatMap { shard =>
-      val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qc) =>
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
-        var r = 0
-        while (r < n) {
-          val c = shard.codes(r)
-          val w = math.min(qc.length, c.length)
-          var acc = 0L
-          var i = 0
-          while (i < w) {
-            acc += java.lang.Long.bitCount(qc(i) ^ c(i))
-            i += 1
-          }
-          val d = acc.toDouble
-          val id = shard.ids(r)
-          if (filled < k || d < bd(filled - 1) ||
-              (d == bd(filled - 1) && id < bi(filled - 1))) {
-            var pos = math.min(filled, k - 1)
-            while (pos > 0 && (bd(pos - 1) > d ||
-                   (bd(pos - 1) == d && bi(pos - 1) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = d; bi(pos) = id
-            if (filled < k) filled += 1
-          }
-          r += 1
-        }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy()
-    out
+    ResidentServe.requireDim(words, qs.iterator.map(_._2.length))
+    ResidentServe.batch(rdd, ResidentBinary.HammingBatch(qs, k))(
+      ResidentBinary.scan)(ProbeMerge.topK(_, k, treeMergeAt,
+      estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** Two-tier serving probe: per shard, the packed codes pick the `c`
@@ -92,82 +60,15 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
                        c: Int, treeMergeAt: Int = 64,
                        metric: String = graft.operators.Metric.L2): Array[(Long, Long, Double, Long)] = {
     require(c >= k, s"rerank budget c=$c must be >= k=$k")
+    ResidentServe.requireDim(words, qs.iterator.map(_._2.length))
+    ResidentServe.requireDim(d, qs.iterator.map(_._3.length))
     // tier 2's float kernel: L2 or negated inner product (the OOD track's
     // metric — text2image-style corpora rerank by ip, and the binary tier
     // is metric-blind so only this refine step changes)
-    val ip = metric == graft.operators.Metric.Ip
-    val bq = spark.sparkContext.broadcast(qs)
-    val local = rdd.flatMap { shard =>
-      require(shard.vecs.nonEmpty || shard.ids.isEmpty,
-        "probeBatchRerank needs pinFloats=true at load")
-      val n = shard.ids.length
-      // per-shard budget never exceeds the shard population (c = ∞ is the
-      // exact-degenerate point, not a giant allocation)
-      val cc = math.max(1, math.min(c, n))
-      if (n == 0) Iterator.empty
-      else bq.value.iterator.flatMap { case (qid, qc, qv) =>
-        // tier 1: Hamming top-c over packed codes (insertion buffer)
-        val cd = new Array[Long](cc)
-        val ci = new Array[Int](cc) // shard-local row index, resolves floats
-        var filled = 0
-        var r = 0
-        while (r < n) {
-          val code = shard.codes(r)
-          val w = math.min(qc.length, code.length)
-          var hd = 0L
-          var i = 0
-          while (i < w) { hd += java.lang.Long.bitCount(qc(i) ^ code(i)); i += 1 }
-          val id = shard.ids(r)
-          if (filled < cc || hd < cd(filled - 1) ||
-              (hd == cd(filled - 1) && id < shard.ids(ci(filled - 1)))) {
-            var pos = math.min(filled, cc - 1)
-            while (pos > 0 && (cd(pos - 1) > hd ||
-                   (cd(pos - 1) == hd && shard.ids(ci(pos - 1)) > id))) {
-              cd(pos) = cd(pos - 1); ci(pos) = ci(pos - 1); pos -= 1
-            }
-            cd(pos) = hd; ci(pos) = r
-            if (filled < cc) filled += 1
-          }
-          r += 1
-        }
-        // tier 2: exact float L2 on the survivors only, top-k
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var kept = 0
-        var s = 0
-        while (s < filled) {
-          val row = ci(s)
-          val v = shard.vecs(row)
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var i = 0
-          if (ip) {
-            while (i < d0) { acc -= qv(i).toDouble * v(i).toDouble; i += 1 }
-          } else {
-            while (i < d0) {
-              val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-            }
-          }
-          val id = shard.ids(row)
-          if (kept < k || acc < bd(kept - 1) ||
-              (acc == bd(kept - 1) && id < bi(kept - 1))) {
-            var pos = math.min(kept, k - 1)
-            while (pos > 0 && (bd(pos - 1) > acc ||
-                   (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-              bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-            }
-            bd(pos) = acc; bi(pos) = id
-            if (kept < k) kept += 1
-          }
-          s += 1
-        }
-        (0 until kept).iterator.map(i => (qid, bi(i), bd(i)))
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy()
-    out
+    ResidentServe.batch(rdd, ResidentBinary.RerankBatch(qs, k, c,
+      metric == graft.operators.Metric.Ip))(ResidentBinary.scanRerank)(
+      ProbeMerge.topK(_, k, treeMergeAt,
+        estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** [[probeBatchRerank]] with DataFrame plumbing: `queries` needs
@@ -201,6 +102,59 @@ final class ResidentBinary(spark: SparkSession, rdd: RDD[BinaryShard]) {
 }
 
 object ResidentBinary {
+  private final case class HammingBatch(qs: Array[(Long, Array[Long])], k: Int)
+  private final case class RerankBatch(
+      qs: Array[(Long, Array[Long], Array[Float])], k: Int, c: Int, ip: Boolean)
+
+  /** XOR+popcount over the query's words (the boundary checked the width). */
+  private def hamming(qc: Array[Long], code: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < qc.length) {
+      acc += java.lang.Long.bitCount(qc(i) ^ code(i))
+      i += 1
+    }
+    acc
+  }
+
+  private def scan(shard: BinaryShard,
+                   b: HammingBatch): Iterator[(Long, Long, Double)] = {
+    val n = shard.ids.length
+    b.qs.iterator.flatMap { case (qid, qc) =>
+      val top = new TopKBuffer(b.k)
+      var r = 0
+      while (r < n) {
+        top.offer(hamming(qc, shard.codes(r)).toDouble, shard.ids(r))
+        r += 1
+      }
+      top.rows(qid)
+    }
+  }
+
+  private def scanRerank(shard: BinaryShard,
+                         b: RerankBatch): Iterator[(Long, Long, Double)] = {
+    require(shard.vecs.nonEmpty || shard.ids.isEmpty,
+      "probeBatchRerank needs pinFloats=true at load")
+    val n = shard.ids.length
+    // per-shard budget never exceeds the shard population (c = ∞ is the
+    // exact-degenerate point, not a giant allocation)
+    val cc = math.max(1, math.min(b.c, n))
+    if (n == 0) Iterator.empty
+    else b.qs.iterator.flatMap { case (qid, qc, qv) =>
+      // tier 1: Hamming top-c over packed codes (integer distances, exact
+      // as double)
+      val cand = new TopKBuffer(cc, withVecs = true)
+      var r = 0
+      while (r < n) {
+        cand.offer(hamming(qc, shard.codes(r)).toDouble, shard.ids(r),
+          shard.vecs(r))
+        r += 1
+      }
+      // tier 2: exact float distance on the survivors only, top-k
+      cand.refine(qid, qv, b.ip, b.k)
+    }
+  }
+
   /** Pack and pin a float corpus — (id, vec) — as resident binary shards.
     * Build once, probe many. `pinFloats` additionally pins the float rows
     * next to their codes for [[ResidentBinary.probeBatchRerank]] (the
@@ -229,7 +183,13 @@ object ResidentBinary {
           if (pinFloats) rows.map(_._3) else Array.empty))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the shards before the first probe
-    new ResidentBinary(spark, rdd)
+    // pinned floats serve d; codes-only shards serve their word width
+    val w = ResidentServe.pin(rdd)(s =>
+      if (s.ids.isEmpty) -1
+      else if (pinFloats) s.vecs(0).length
+      else s.codes(0).length)
+    if (pinFloats) new ResidentBinary(spark, rdd,
+      if (w < 0) -1 else (w + 63) / 64, w)
+    else new ResidentBinary(spark, rdd, w, -1)
   }
 }

@@ -41,11 +41,12 @@ final case class IvfAdcShard(
   * and SQ8 holds 0.94 with rerank 80 — at the big decades run residual
   * or [[ResidentIvfSq8]]; the raw-coded form is the byte-budget
   * comparison point and the exact degenerate gate. */
-final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
-                           cb: Pq.Codebook,
-                           router: CoarseRouter,
-                           metric: String,
-                           residual: Boolean = false) {
+final class ResidentIvfAdc private[index] (spark: SparkSession,
+                                           rdd: RDD[IvfAdcShard],
+                                           cb: Pq.Codebook,
+                                           router: CoarseRouter,
+                                           metric: String,
+                                           residual: Boolean, d: Int) {
 
   private def centroids: Array[(Int, Array[Float])] = router.centroids
 
@@ -132,11 +133,9 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
                            rerank: Int,
                            treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    val stride = cb.stride
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
     val dsub = cb.dsub
-    val ip = metric == Metric.Ip
     val isRes = residual
-    val t2 = term2Bc.orNull
     // one plain LUT per query in BOTH modes; residual mode adds only an
     // m-vector of −2⟨c_j,q_j⟩ corrections per routed cluster (see term2Bc)
     // — the full per-(query, cluster) LUT is assembled shard-side from the
@@ -167,94 +166,10 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
         } else null
       (qid, qv, lut, cids, qc)
     }
-    val bq = spark.sparkContext.broadcast(routed)
-    val local = rdd.flatMap { shard =>
-      val m = shard.m
-      val t2map = if (isRes) t2.value else null
-      val scratch = if (isRes) new Array[Double](m * stride) else null
-      bq.value.iterator.flatMap { case (qid, qv, lutPlain, cids, qc) =>
-        val r = rerank
-        val bd = new Array[Double](r)
-        val bId = new Array[Long](r)
-        val bVec = new Array[Array[Float]](r)
-        var filled = 0
-        var ci = 0
-        while (ci < cids.length) {
-          val lut =
-            if (isRes) {
-              val pre = t2map(cids(ci))
-              val qcj = qc(ci)
-              var j = 0
-              while (j < m) {
-                val corr = qcj(j)
-                val off = j * stride
-                var w = 0
-                while (w < stride) {
-                  scratch(off + w) = lutPlain(off + w) + pre(off + w) + corr
-                  w += 1
-                }
-                j += 1
-              }
-              scratch
-            } else lutPlain
-          shard.clusters.get(cids(ci)) match {
-            case Some((ids, codes, vecs)) =>
-              val n = ids.length
-              var row = 0
-              while (row < n) {
-                val off = row * m
-                var acc = 0.0
-                var j = 0
-                while (j < m) {
-                  acc += lut(j * stride + codes(off + j))
-                  j += 1
-                }
-                val id = ids(row)
-                if (filled < r || acc < bd(filled - 1) ||
-                    (acc == bd(filled - 1) && id < bId(filled - 1))) {
-                  var pos = math.min(filled, r - 1)
-                  while (pos > 0 && (bd(pos - 1) > acc ||
-                         (bd(pos - 1) == acc && bId(pos - 1) > id))) {
-                    bd(pos) = bd(pos - 1); bId(pos) = bId(pos - 1)
-                    bVec(pos) = bVec(pos - 1); pos -= 1
-                  }
-                  bd(pos) = acc; bId(pos) = id; bVec(pos) = vecs(row)
-                  if (filled < r) filled += 1
-                }
-                row += 1
-              }
-            case None =>
-          }
-          ci += 1
-        }
-        // float refine of the survivors (the reference's refine step),
-        // then emit only this shard's k best — see ProbeMerge.selectTopK
-        val rd = new Array[Double](filled)
-        var i2 = 0
-        while (i2 < filled) {
-          val v = bVec(i2)
-          val d0 = math.min(qv.length, v.length)
-          var acc = 0.0
-          var x = 0
-          if (ip) {
-            while (x < d0) { acc += qv(x).toDouble * v(x).toDouble; x += 1 }
-            acc = -acc
-          } else {
-            while (x < d0) {
-              val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-            }
-          }
-          rd(i2) = acc
-          i2 += 1
-        }
-        ProbeMerge.selectTopK(bId, rd, filled, k).iterator
-          .map { case (id, dd) => (qid, id, dd) }
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
+    ResidentServe.batch(rdd, ResidentIvfAdc.IvfAdcBatch(routed,
+      term2Bc.orNull, k, rerank, cb.stride, metric == Metric.Ip))(
+      ResidentIvfAdc.scan)(ProbeMerge.topK(_, k, treeMergeAt,
+      estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
@@ -286,6 +201,67 @@ final class ResidentIvfAdc(spark: SparkSession, rdd: RDD[IvfAdcShard],
 }
 
 object ResidentIvfAdc {
+  /** One batch: per query (qid, qvec, plain LUT, routed cids, residual
+    * corrections or null); `term2` is the load-time residual table
+    * broadcast, null in raw-code mode. */
+  private final case class IvfAdcBatch(
+      routed: Array[(Long, Array[Float], Array[Double], Array[Int],
+        Array[Array[Double]])],
+      term2: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Double]]],
+      k: Int, rerank: Int, stride: Int, ip: Boolean)
+
+  /** ADC-scan only the routed clusters' rows into a `rerank`-bounded
+    * buffer, then float-refine the survivors (the reference's refine
+    * step). */
+  private def scan(shard: IvfAdcShard,
+                   b: IvfAdcBatch): Iterator[(Long, Long, Double)] = {
+    val m = shard.m
+    val stride = b.stride
+    val t2map = if (b.term2 != null) b.term2.value else null
+    val scratch = if (t2map != null) new Array[Double](m * stride) else null
+    b.routed.iterator.flatMap { case (qid, qv, lutPlain, cids, qc) =>
+      val coarse = new TopKBuffer(b.rerank, withVecs = true)
+      var ci = 0
+      while (ci < cids.length) {
+        val lut =
+          if (t2map != null) {
+            val pre = t2map(cids(ci))
+            val qcj = qc(ci)
+            var j = 0
+            while (j < m) {
+              val corr = qcj(j)
+              val off = j * stride
+              var w = 0
+              while (w < stride) {
+                scratch(off + w) = lutPlain(off + w) + pre(off + w) + corr
+                w += 1
+              }
+              j += 1
+            }
+            scratch
+          } else lutPlain
+        shard.clusters.get(cids(ci)) match {
+          case Some((ids, codes, vecs)) =>
+            var row = 0
+            while (row < ids.length) {
+              val off = row * m
+              var acc = 0.0
+              var j = 0
+              while (j < m) {
+                acc += lut(j * stride + codes(off + j))
+                j += 1
+              }
+              coarse.offer(acc, ids(row), vecs(row))
+              row += 1
+            }
+          case None =>
+        }
+        ci += 1
+      }
+      coarse.refine(qid, qv, b.ip, b.k)
+    }
+  }
+
   /** Assign `base` = (id, vec) to `ivf`'s clusters, encode with `cb`, and
     * pin cluster-grouped code shards resident. Build once, probe many. */
   def load(base: DataFrame, ivf: IvfIndex, cb: Pq.Codebook,
@@ -346,8 +322,10 @@ object ResidentIvfAdc {
         Iterator.single(IvfAdcShard(clusters, m))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize before the first probe
+    val d = ResidentServe.pin(rdd)(_.clusters.valuesIterator
+      .collectFirst { case (_, _, vs) if vs.nonEmpty => vs(0).length }
+      .getOrElse(-1))
     new ResidentIvfAdc(spark, rdd, cb, new CoarseRouter(cents, sizes),
-      metric, residual)
+      metric, residual, d)
   }
 }

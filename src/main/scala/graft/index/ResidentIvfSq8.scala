@@ -55,7 +55,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
     * (same round-half-up on the same double expression), so served coarse
     * distances equal the dataflow form's bit-for-bit. */
   private def encode(qv: Array[Float]): Array[Short] = {
-    val n = math.min(qv.length, mins.length)
+    val n = qv.length
     val out = new Array[Short](n)
     var i = 0
     while (i < n) {
@@ -73,11 +73,12 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                  treeMergeAt: Int = 64,
                  efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.requireDim(mins.length, qs.iterator.map(_._2.length))
     val rt = router
     val routed = Router.parallelMap(qs) { case (qid, qv) =>
       (qid, qv, encode(qv), rt.byNprobeGraph(qv, nprobe, efRoute))
     }
-    probeRouted(routed, k, rerank, treeMergeAt)
+    serve(ResidentIvfSq8.Sq8Batch(routed, null, k, rerank), treeMergeAt)
   }
 
   /** [[probeBatch]] with MASS-ADAPTIVE routing — the corpus-fraction knob
@@ -94,6 +95,7 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
                      shardRoute: Option[Boolean] = None,
                      efRoute: Int = Int.MaxValue): Array[(Long, Long, Double, Long)] = {
     require(rerank >= k, s"rerank $rerank must be >= k $k")
+    ResidentServe.requireDim(mins.length, qs.iterator.map(_._2.length))
     // graph routing drops the per-query routing term from O(C·d) to
     // O(efRoute·log C), so the shard-route bound scales by the work the
     // graph actually does per query rather than by C
@@ -103,54 +105,22 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
         math.max(2, router.numClusters)))
     val onShards = shardRoute.getOrElse(
       qs.length.toLong * routeCost * mins.length > Router.shardRouteVolume)
-    if (!onShards) {
-      val rt = router
-      val routed = Router.parallelMap(qs) { case (qid, qv) =>
-        (qid, qv, encode(qv), rt.byMassGraph(qv, minMass, efRoute, maxNprobe))
-      }
-      probeRouted(routed, k, rerank, treeMergeAt)
-    } else {
-      val coded = Router.parallelMap(qs) { case (qid, qv) =>
-        (qid, qv, encode(qv))
-      }
-      val bq = spark.sparkContext.broadcast(coded)
-      val rb = routerBc
-      val mm = minMass
-      val mp = maxNprobe
-      val ef = efRoute
-      val kk = k
-      val rr = rerank
-      val local = rdd.flatMap { shard =>
-        val rt = rb.value
-        bq.value.iterator.flatMap { case (qid, qv, qc) =>
-          ResidentIvfSq8.scanShard(shard, qid, qv, qc,
-            rt.byMassGraph(qv, mm, ef, mp), kk, rr)
-        }
-      }
-      val out = ProbeMerge.topK(local, k, treeMergeAt,
-        estRows = qs.length.toLong * k * local.getNumPartitions)
-      bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-      out
+    val rt = router
+    // shard-routed batches leave cids null: each shard routes the
+    // broadcast queries itself through the load-time router broadcast
+    val routed = Router.parallelMap(qs) { case (qid, qv) =>
+      (qid, qv, encode(qv),
+        if (onShards) null else rt.byMassGraph(qv, minMass, efRoute, maxNprobe))
     }
+    serve(ResidentIvfSq8.Sq8Batch(routed,
+      if (onShards) ResidentIvfSq8.ShardRoute(routerBc, minMass, maxNprobe, efRoute) else null,
+      k, rerank), treeMergeAt)
   }
 
-  private def probeRouted(
-      routed: Array[(Long, Array[Float], Array[Short], Array[Int])],
-      k: Int, rerank: Int,
-      treeMergeAt: Int): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(routed)
-    val kk = k
-    val rr = rerank
-    val local = rdd.flatMap { shard =>
-      bq.value.iterator.flatMap { case (qid, qv, qc, cids) =>
-        ResidentIvfSq8.scanShard(shard, qid, qv, qc, cids, kk, rr)
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = routed.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
-  }
+  private def serve(b: ResidentIvfSq8.Sq8Batch,
+                    treeMergeAt: Int): Array[(Long, Long, Double, Long)] =
+    ResidentServe.batch(rdd, b)(ResidentIvfSq8.scan)(ProbeMerge.topK(_, b.k,
+      treeMergeAt, estRows = b.qs.length.toLong * b.k * rdd.getNumPartitions))
 
   /** [[probeBatch]] with DataFrame plumbing on both ends. */
   def probeLocal(queries: DataFrame, k: Int, nprobe: Int,
@@ -181,76 +151,66 @@ final class ResidentIvfSq8(spark: SparkSession, rdd: RDD[IvfSq8Shard],
 }
 
 object ResidentIvfSq8 {
+  /** Shard-side mass routing knobs: the load-time router broadcast and the
+    * [[CoarseRouter.byMassGraph]] arguments every shard routes with. */
+  private final case class ShardRoute(
+      router: org.apache.spark.broadcast.Broadcast[CoarseRouter],
+      minMass: Double, maxNprobe: Int, efRoute: Int)
+
+  /** One batch: per query (qid, qvec, SQ8 code, routed cids — null when
+    * `route` moves routing onto the shards). */
+  private final case class Sq8Batch(
+      qs: Array[(Long, Array[Float], Array[Short], Array[Int])],
+      route: ShardRoute, k: Int, rerank: Int)
+
+  private def scan(shard: IvfSq8Shard,
+                   b: Sq8Batch): Iterator[(Long, Long, Double)] = {
+    val rt = if (b.route != null) b.route.router.value else null
+    b.qs.iterator.flatMap { case (qid, qv, qc, cids) =>
+      scanShard(shard, qid, qv, qc,
+        if (cids != null) cids
+        else rt.byMassGraph(qv, b.route.minMass, b.route.efRoute,
+          b.route.maxNprobe),
+        b.k, b.rerank)
+    }
+  }
 
   /** One (query, shard) probe: integer-SQ8 scan of the routed clusters
     * into a `rerank`-bounded (coarse dist asc, id asc) buffer, exact
     * float refine of the survivors, then this shard's k best only
     * ([[ProbeMerge.selectTopK]]). Static so the scan closure captures no
     * driver-side state. */
-  private[index] def scanShard(shard: IvfSq8Shard, qid: Long,
+  private def scanShard(shard: IvfSq8Shard, qid: Long,
                                qv: Array[Float], qc: Array[Short],
                                cids: Array[Int], k: Int,
                                rerank: Int): Iterator[(Long, Long, Double)] = {
-    val r = rerank
-    // bounded insertion, (coarse dist asc, id asc) — integer SQ8
-    // distances kept exact in Int (d·255² fits comfortably)
-    val bd = new Array[Int](r)
-    val bId = new Array[Long](r)
-    val bVec = new Array[Array[Float]](r)
-    var filled = 0
+    // (coarse dist asc, id asc) over integer SQ8 distances — kept exact in
+    // Int (d·255² fits comfortably), so widening to double is exact too
+    val coarse = new TopKBuffer(rerank, withVecs = true)
     var ci = 0
     while (ci < cids.length) {
       shard.clusters.get(cids(ci)) match {
         case Some((ids, codes, vecs)) =>
           val d = shard.d
-          val n = ids.length
           var row = 0
-          while (row < n) {
+          while (row < ids.length) {
             val off = row * d
             var acc = 0
             var j = 0
-            val lim = math.min(d, qc.length)
-            while (j < lim) {
+            while (j < d) {
               val t = qc(j) - codes(off + j)
               acc += t * t
               j += 1
             }
-            val id = ids(row)
-            if (filled < r || acc < bd(filled - 1) ||
-                (acc == bd(filled - 1) && id < bId(filled - 1))) {
-              var pos = math.min(filled, r - 1)
-              while (pos > 0 && (bd(pos - 1) > acc ||
-                     (bd(pos - 1) == acc && bId(pos - 1) > id))) {
-                bd(pos) = bd(pos - 1); bId(pos) = bId(pos - 1)
-                bVec(pos) = bVec(pos - 1); pos -= 1
-              }
-              bd(pos) = acc; bId(pos) = id; bVec(pos) = vecs(row)
-              if (filled < r) filled += 1
-            }
+            coarse.offer(acc, ids(row), vecs(row))
             row += 1
           }
         case None =>
       }
       ci += 1
     }
-    // exact float refine of the survivors (the reference's refine step),
-    // then emit only this shard's k best — see ProbeMerge.selectTopK for
-    // why k, not rerank, is the emission bound
-    val rd = new Array[Double](filled)
-    var i2 = 0
-    while (i2 < filled) {
-      val v = bVec(i2)
-      val d0 = math.min(qv.length, v.length)
-      var acc = 0.0
-      var x = 0
-      while (x < d0) {
-        val t = qv(x).toDouble - v(x).toDouble; acc += t * t; x += 1
-      }
-      rd(i2) = acc
-      i2 += 1
-    }
-    ProbeMerge.selectTopK(bId, rd, filled, k).iterator
-      .map { case (id, dd) => (qid, id, dd) }
+    // exact float refine of the survivors (the reference's refine step)
+    coarse.refine(qid, qv, ip = false, k)
   }
 
   /** Assign `base` = (id, vec) to `ivf`'s clusters, SQ8-encode with the

@@ -25,8 +25,9 @@ final case class ScanShard(ids: Array[Long], vecs: Array[Array[Float]],
   * candidate rows return — the classic distributed serving fan-out. The
   * signature prefilter does the reference's bloom-skip work
   * (bow_id_selector.swig:107-130) before any distance is computed. */
-final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
-                         ipMetric: Boolean) {
+final class ResidentScan private[index] (spark: SparkSession,
+                                         rdd: RDD[ScanShard],
+                                         ipMetric: Boolean, d: Int) {
 
   /** Serving-form batch probe. `qs` rows are (qid, qvec, qtags, qsig) with
     * qsig = OR of the query tags' signatures (same bit layout as the base
@@ -36,65 +37,12 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatch(qs: Array[(Long, Array[Float], Array[Int], Long)],
                  k: Int,
                  treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
-    val ip = ipMetric
-    val local = rdd.flatMap { shard =>
-      val queries = bq.value
-      val n = shard.ids.length
-      queries.iterator.flatMap { case (qid, qv, qt, qsig) =>
-        // bounded worst-first insertion buffer: k is small (typically 10),
-        // so an insertion sort beats a heap on constant factors
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
-        var r = 0
-        while (r < n) {
-          if ((qsig & ~shard.sigs(r)) == 0L) { // lossless bloom-skip
-            val rowTags = shard.tags(r)
-            var ti = 0
-            var all = true
-            while (all && ti < qt.length) {
-              if (!rowTags.contains(qt(ti))) all = false
-              ti += 1
-            }
-            if (all) {
-              // same double accumulation as the codegen kernels
-              val v = shard.vecs(r)
-              val d0 = math.min(qv.length, v.length)
-              var acc = 0.0
-              var i = 0
-              if (ip) {
-                while (i < d0) { acc += qv(i).toDouble * v(i).toDouble; i += 1 }
-                acc = -acc
-              } else {
-                while (i < d0) {
-                  val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-                }
-              }
-              val id = shard.ids(r)
-              if (filled < k || acc < bd(filled - 1) ||
-                  (acc == bd(filled - 1) && id < bi(filled - 1))) {
-                var pos = math.min(filled, k - 1)
-                while (pos > 0 && (bd(pos - 1) > acc ||
-                       (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-                  bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-                }
-                bd(pos) = acc; bi(pos) = id
-                if (filled < k) filled += 1
-              }
-            }
-          }
-          r += 1
-        }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
-      }
-    }
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
     // driver merge at serving partition counts, two-level tree past
     // `treeMergeAt` shards (ProbeMerge) — identical rows either way
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-    out
+    ResidentServe.batch(rdd, ResidentScan.TagBatch(qs, k, ipMetric))(
+      ResidentScan.scanTagged)(ProbeMerge.topK(_, k, treeMergeAt,
+        estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** Exact top-k over the rows whose id falls in one of `ranges` (disjoint,
@@ -105,58 +53,10 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
   def probeBatchRanges(qs: Array[(Long, Array[Float])], k: Int,
                        ranges: Array[(Long, Long)],
                        treeMergeAt: Int = 64): Array[(Long, Long, Double, Long)] = {
-    val bq = spark.sparkContext.broadcast(qs)
-    val br = spark.sparkContext.broadcast(ranges)
-    val ip = ipMetric
-    val local = rdd.flatMap { shard =>
-      val mask = br.value
-      val starts = mask.map(_._1)
-      def liveId(id: Long): Boolean = {
-        var p = java.util.Arrays.binarySearch(starts, id)
-        if (p < 0) p = -p - 2 // last range starting at or before id
-        p >= 0 && id < mask(p)._2
-      }
-      val n = shard.ids.length
-      bq.value.iterator.flatMap { case (qid, qv) =>
-        val bd = new Array[Double](k)
-        val bi = new Array[Long](k)
-        var filled = 0
-        var r = 0
-        while (r < n) {
-          val id = shard.ids(r)
-          if (liveId(id)) {
-            val v = shard.vecs(r)
-            val d0 = math.min(qv.length, v.length)
-            var acc = 0.0
-            var i = 0
-            if (ip) {
-              while (i < d0) { acc += qv(i).toDouble * v(i).toDouble; i += 1 }
-              acc = -acc
-            } else {
-              while (i < d0) {
-                val d = qv(i).toDouble - v(i).toDouble; acc += d * d; i += 1
-              }
-            }
-            if (filled < k || acc < bd(filled - 1) ||
-                (acc == bd(filled - 1) && id < bi(filled - 1))) {
-              var pos = math.min(filled, k - 1)
-              while (pos > 0 && (bd(pos - 1) > acc ||
-                     (bd(pos - 1) == acc && bi(pos - 1) > id))) {
-                bd(pos) = bd(pos - 1); bi(pos) = bi(pos - 1); pos -= 1
-              }
-              bd(pos) = acc; bi(pos) = id
-              if (filled < k) filled += 1
-            }
-          }
-          r += 1
-        }
-        (0 until filled).iterator.map(i => (qid, bi(i), bd(i)))
-      }
-    }
-    val out = ProbeMerge.topK(local, k, treeMergeAt,
-      estRows = qs.length.toLong * k * local.getNumPartitions)
-    bq.destroy(); br.destroy()
-    out
+    ResidentServe.requireDim(d, qs.iterator.map(_._2.length))
+    ResidentServe.batch(rdd, ResidentScan.RangeBatch(qs, ranges, k, ipMetric))(
+      ResidentScan.scanRanges)(ProbeMerge.topK(_, k, treeMergeAt,
+        estRows = qs.length.toLong * k * rdd.getNumPartitions))
   }
 
   /** [[probeBatch]] with DataFrame plumbing on both ends; results equal
@@ -176,6 +76,58 @@ final class ResidentScan(spark: SparkSession, rdd: RDD[ScanShard],
 }
 
 object ResidentScan {
+  private final case class TagBatch(
+      qs: Array[(Long, Array[Float], Array[Int], Long)], k: Int, ip: Boolean)
+  private final case class RangeBatch(qs: Array[(Long, Array[Float])],
+                                      ranges: Array[(Long, Long)], k: Int,
+                                      ip: Boolean)
+
+  private def scanTagged(shard: ScanShard,
+                         b: TagBatch): Iterator[(Long, Long, Double)] = {
+    val n = shard.ids.length
+    b.qs.iterator.flatMap { case (qid, qv, qt, qsig) =>
+      val top = new TopKBuffer(b.k)
+      var r = 0
+      while (r < n) {
+        // lossless bloom-skip, then the exact conjunctive tag test
+        if ((qsig & ~shard.sigs(r)) == 0L && hasAll(shard.tags(r), qt))
+          top.offer(ResidentServe.dist(qv, shard.vecs(r), b.ip), shard.ids(r))
+        r += 1
+      }
+      top.rows(qid)
+    }
+  }
+
+  private def hasAll(rowTags: Array[Int], qt: Array[Int]): Boolean = {
+    var ti = 0
+    while (ti < qt.length) {
+      if (!rowTags.contains(qt(ti))) return false
+      ti += 1
+    }
+    true
+  }
+
+  private def scanRanges(shard: ScanShard,
+                         b: RangeBatch): Iterator[(Long, Long, Double)] = {
+    val starts = b.ranges.map(_._1)
+    def liveId(id: Long): Boolean = {
+      var p = java.util.Arrays.binarySearch(starts, id)
+      if (p < 0) p = -p - 2 // last range starting at or before id
+      p >= 0 && id < b.ranges(p)._2
+    }
+    val n = shard.ids.length
+    b.qs.iterator.flatMap { case (qid, qv) =>
+      val top = new TopKBuffer(b.k)
+      var r = 0
+      while (r < n) {
+        val id = shard.ids(r)
+        if (liveId(id)) top.offer(ResidentServe.dist(qv, shard.vecs(r), b.ip), id)
+        r += 1
+      }
+      top.rows(qid)
+    }
+  }
+
   /** Pin a tagged corpus — (id, vec, tags) — as resident scan shards with
     * precomputed signatures. Build once, probe many. */
   def load(base: DataFrame, numPartitions: Int,
@@ -199,7 +151,7 @@ object ResidentScan {
           rows.map(_._3), rows.map(_._4)))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the shards before the first probe
-    new ResidentScan(spark, rdd, ip)
+    val d = ResidentServe.pin(rdd)(s => if (s.vecs.isEmpty) -1 else s.vecs(0).length)
+    new ResidentScan(spark, rdd, ip, d)
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 final class ResidentTagRegistry private[index] (
     spark: SparkSession,
     rdd: org.apache.spark.rdd.RDD[(String, HnswIndex)],
-    val keys: Set[String]) {
+    val keys: Set[String], d: Int) {
 
   /** Resident (key, part) graph count = the per-job task fan of a batch
     * that hits every key ([[TagSubindexes.loadResident]] pins one graph
@@ -64,57 +64,41 @@ final class ResidentTagRegistry private[index] (
     * probe work is unchanged — each qid is still searched once, against
     * only its own key's graphs — parallelism becomes elements × slices.
     * Rows are identical to the unsliced call: stripes partition qids, and
-    * the per-qid result never depends on which other qids share its job. */
+    * the per-qid result never depends on which other qids share its job.
+    * Striping is [[ProbeSlices.striped]] over the flattened (key, qid,
+    * qvec) entries, so a failing stripe fails the batch fast. */
   def probeGroupsBatch(groups: Map[String, Array[(Long, Array[Float])]],
                        k: Int, efSearch: Int,
                        treeMergeAt: Int = 64,
                        slices: Int = 1): Array[(Long, Long, Double, Long)] = {
-    def one(g: Map[String, Array[(Long, Array[Float])]]): Array[(Long, Long, Double, Long)] = {
-      val bq = spark.sparkContext.broadcast(g)
-      val local = rdd.flatMap { case (key, idx) =>
-        bq.value.getOrElse(key, Array.empty[(Long, Array[Float])])
-          .iterator.flatMap { case (qid, qv) =>
-            idx.search(qv, k, efSearch).iterator
-              .map { case (id, d) => (qid, id, d) }
-          }
+    val entries = groups.toArray.flatMap { case (key, qs) =>
+      qs.map { case (qid, qv) => (key, qid, qv) }
+    }
+    ResidentServe.requireDim(d, entries.iterator.map(_._3.length))
+    ProbeSlices.striped(entries, slices) { st =>
+      val g = st.groupBy(_._1).map { case (key, es) =>
+        key -> es.map(e => (e._2, e._3))
       }
-      val out = ProbeMerge.topK(local, k, treeMergeAt,
-        estRows = g.valuesIterator.map(_.length.toLong).sum * k *
-          local.getNumPartitions)
-      bq.destroy() // serving loop: don't accumulate per-batch broadcasts
-      out
-    }
-    if (slices <= 1) one(groups)
-    else {
-      val stripes = (0 until slices).map { s =>
-        groups.iterator.map { case (key, qs) =>
-          key -> qs.iterator.zipWithIndex
-            .collect { case (q, i) if i % slices == s => q }.toArray
-        }.filter(_._2.nonEmpty).toMap
-      }.filter(_.nonEmpty)
-      // an empty (or fully-empty-after-striping) batch has no stripes — a
-      // zero-thread pool would throw where the unsliced path returns empty
-      if (stripes.isEmpty) return Array.empty
-      // dedicated pool: Spark job submission blocks per stripe, and the
-      // global ExecutionContext is shared with caller code — a serving
-      // loop must not deadlock on someone else's starved pool
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(stripes.length)
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val fs = stripes.map(st => scala.concurrent.Future(one(st))(ec))
-        val parts = fs.map(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        // stripes partition qids — concatenate and restore (qid, rank) order
-        val all = Array.concat(parts: _*)
-        scala.util.Sorting.stableSort(all,
-          (a: (Long, Long, Double, Long), b: (Long, Long, Double, Long)) =>
-            a._1 < b._1 || (a._1 == b._1 && a._4 < b._4))
-        all
-      } finally pool.shutdown()
-    }
+      ResidentServe.batch(rdd, ResidentTagRegistry.GroupBatch(g, k, efSearch))(
+        ResidentTagRegistry.probeShard)(ProbeMerge.topK(_, k, treeMergeAt,
+        estRows = st.length.toLong * k * rdd.getNumPartitions))
+    }(r => (r._1, r._4))
   }
 
   def unload(): Unit = rdd.unpersist()
+}
+
+object ResidentTagRegistry {
+  private final case class GroupBatch(
+      groups: Map[String, Array[(Long, Array[Float])]], k: Int, efSearch: Int)
+
+  private def probeShard(shard: (String, HnswIndex),
+                         b: GroupBatch): Iterator[(Long, Long, Double)] =
+    b.groups.getOrElse(shard._1, Array.empty[(Long, Array[Float])])
+      .iterator.flatMap { case (qid, qv) =>
+        shard._2.search(qv, b.k, b.efSearch).iterator
+          .map { case (id, d) => (qid, id, d) }
+      }
 }
 
 /** X8 per-tag subindexes (the reference's hot-tag strategy,
@@ -275,7 +259,7 @@ object TagSubindexes {
     val keys = tagKeys ++ pairKeys
     if (keys.isEmpty)
       return new ResidentTagRegistry(spark,
-        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty)
+        spark.sparkContext.emptyRDD[(String, HnswIndex)], Set.empty, -1)
     val keyCol = if (tagKeys.nonEmpty) "tag" else "pair"
     val rows = spark.read.parquet(path)
       .select(col(keyCol).cast("string").as("key"), col("part"), col("seq"),
@@ -315,8 +299,7 @@ object TagSubindexes {
         (key, idx)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // materialize the graphs before the first probe
-    new ResidentTagRegistry(spark, rdd, keys)
+    new ResidentTagRegistry(spark, rdd, keys, ResidentServe.pin(rdd)(_._2.dim))
   }
 
   private[index] def builtPairs(spark: SparkSession, path: String): Set[(Int, Int)] = {

@@ -818,6 +818,12 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
         .as[(Long, Long, Long)].collect().toSet
       assert(viaBatch === viaDf,
         "probeGroupsBatch must equal probeGroups row-for-row")
+      // striped batches (what serving callers pass via ProbeSlices.auto)
+      // return the unsliced rows, in the same (qid, rank) order
+      val unsliced = reg.probeGroupsBatch(groups, k = 10, efSearch = 64).toSeq
+      for (s <- Seq(3, 64))
+        assert(reg.probeGroupsBatch(groups, k = 10, efSearch = 64,
+          slices = s).toSeq === unsliced, s"slices = $s")
     } finally reg.unload()
   }
 
@@ -1070,51 +1076,6 @@ class IndexSpec extends AnyFunSuite with SparkSuite {
         r => (r._1, r._4)).toSeq ===
         bin.probeBatchRerank(bq, k = 10, c = 25).toSeq)
     } finally bin.unload()
-  }
-
-  test("probeBatch(fan) equals the unfanned batch row-for-row, with and " +
-       "without tombstones/delta") {
-    // r13 (VERDICT r12 item 7): the in-JOB fan (FanoutRDD — one job of
-    // parts × fan tasks, task (shard, stripe) probes round-robin stripe
-    // `i % fan` against shard `i / fan`) replaces concurrent-job striping
-    // on the flat graph rows. Every (query, shard) pair is computed once
-    // with the unchanged kernel, so results must be identical at any fan —
-    // including fan > partitions, fan > nq, and the mutated form where
-    // delta placement must stay keyed on the SHARD, not the child
-    // partition (a bug there would move delta rows between shards and
-    // change which shard ranks them).
-    val qs = emb.where($"vec_id" < 40)
-      .select($"vec_id".cast("long"), $"embedding")
-      .as[(Long, Array[Float])].collect()
-    val flat = HnswKnn.buildResident(base, numPartitions = 4)
-    try {
-      val want = flat.probeBatch(qs, 10, 64).toSeq
-      for (f <- Seq(2, 3, 7, 64))
-        assert(flat.probeBatch(qs, 10, 64, fan = f).toSeq === want,
-          s"clean fan=$f")
-      // fanned batch must also equal the r12 striped batch (the row the
-      // bench published last round)
-      assert(ProbeSlices.striped(qs, 4)(
-        st => flat.probeBatch(st, 10, 64))(r => (r._1, r._4)).toSeq === want)
-    } finally flat.unload()
-    // mutated serving shape: tombstones + delta buffer
-    val mut = HnswKnn.buildResident(
-      base.where($"id" >= 30), numPartitions = 4)
-    try {
-      val delta = base.where($"id" < 30)
-        .select($"id".cast("long"), $"vec")
-        .as[(Long, Array[Float])].collect()
-      val dead = (30L until 60L).toSet
-      val want = mut.probeBatch(qs, 10, 64, dead, delta).toSeq
-      for (f <- Seq(2, 5))
-        assert(mut.probeBatch(qs, 10, 64, dead, delta, fan = f).toSeq === want,
-          s"mutated fan=$f")
-    } finally mut.unload()
-    // degenerate: empty batch at any fan
-    val empty = HnswKnn.buildResident(base, numPartitions = 2)
-    try assert(empty.probeBatch(
-      Array.empty[(Long, Array[Float])], 10, 64, fan = 4).isEmpty)
-    finally empty.unload()
   }
 
   test("ProbeSlices.auto adapts stripes to partitions, cores and batch size") {
